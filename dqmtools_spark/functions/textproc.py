@@ -15,6 +15,8 @@ deterministic decode step between raw bytes and analyzable columns.
 from __future__ import annotations
 
 import re
+from itertools import filterfalse
+from typing import NamedTuple
 
 # --- HTML -> text extraction -------------------------------------------------
 # Deliberately simple and fully deterministic: strip script/style blocks,
@@ -228,3 +230,90 @@ def perplexity(text: str | None, model: dict[str, float], oov: float) -> float |
         return None
     lp = sum(model.get(t, oov) for t in toks) / len(toks)
     return float(2.0 ** (-lp))
+
+
+# --- Gopher/C4 text statistics -----------------------------------------------
+# The nine per-document signals the rule layer thresholds, computed in
+# the fused UDF next to langid/perplexity/scrub.  The definitions are
+# the JVM regex semantics the rules were tuned on:
+#  - a token is a maximal run outside Java's ``\s``, the six ASCII
+#    whitespace characters; NBSP, U+001C..U+001F and U+2028 are token
+#    characters (``str.split()`` would split on them);
+#  - lines are ``split('\n')`` with empty pieces kept; a line counts
+#    when something other than spaces (Spark ``trim``) remains;
+#  - letters are Unicode category L (``str.isalpha``), numbers category
+#    N, both from this interpreter's ``unicodedata`` (Unicode 14.0.0 on
+#    Python 3.11; Java 17's ``\p{L}``/``\p{N}`` are Unicode 13 and lack
+#    525 of those code points);
+#  - ratios divide the integer counts in double precision.
+
+ALL_MARKERS = sorted(set().union(*LANG_MARKERS.values()))
+_MARKER_SET = frozenset(ALL_MARKERS)
+
+_JAVA_WS = " \t\n\x0b\f\r"
+_WS_TOKEN_RE = re.compile(r"[^ \t\n\x0b\f\r]+")
+# symbols are neither L|N (which is exactly str.isalnum, re's \w less
+# '_') nor whitespace; '_' is counted separately
+_SYMBOL_RE = re.compile(r"[^\w \t\n\x0b\f\r]")
+# Java's ``$`` also matches before one final line terminator, so a
+# marker token followed by one of these at the very end still counts
+_FINAL_TERMINATORS = ("\x85", "\u2028", "\u2029")
+
+
+class TextStats(NamedTuple):
+    word_count: int | None
+    mean_word_len: float | None
+    symbol_ratio: float | None
+    stopword_fraction: float | None
+    repeated_line_fraction: float | None
+    alpha_word_fraction: float | None
+    ellipsis_line_fraction: float | None
+    bullet_line_fraction: float | None
+    has_curly_brace: bool | None
+
+
+_NULL_STATS = TextStats(*[None] * len(TextStats._fields))
+
+
+def text_stats(text: str | None) -> TextStats:
+    """All nine statistics of one document (all None for None text)."""
+    if text is None:
+        return _NULL_STATS
+    n_chars = len(text)
+    tokens = _WS_TOKEN_RE.findall(text)
+    wc = len(tokens)
+    # lower() per token equals lower() of the whole text here: the only
+    # context rule (final sigma) stops at whitespace and is never ASCII
+    stop = sum(map(_MARKER_SET.__contains__, map(str.lower, tokens)))
+    if wc and text.endswith(_FINAL_TERMINATORS) and tokens[-1][:-1].lower() in _MARKER_SET:
+        stop += 1
+    symbols = len(_SYMBOL_RE.findall(text)) + text.count("_")
+    lines = [ln for ln in text.split("\n") if ln.strip(" ")]
+    n_lines = len(lines)
+    if wc:
+        non_ws = n_chars - sum(map(text.count, _JAVA_WS))
+        mean_len = non_ws / wc
+        stop_frac = stop / wc
+        letterless = sum(
+            not any(map(str.isalpha, t)) for t in filterfalse(str.isalpha, tokens)
+        )
+        alpha_frac = (wc - letterless) / wc
+    else:
+        mean_len, stop_frac, alpha_frac = None, 0.0, 0.0
+    if n_lines:
+        repeated = 1.0 - len(set(lines)) / n_lines
+        ellipsis = sum(ln.endswith(("...", "…")) for ln in lines) / n_lines
+        bullets = sum(ln.startswith(("- ", "* ", "• ")) for ln in lines) / n_lines
+    else:
+        repeated = ellipsis = bullets = 0.0
+    return TextStats(
+        word_count=wc,
+        mean_word_len=mean_len,
+        symbol_ratio=symbols / n_chars if n_chars else 0.0,
+        stopword_fraction=stop_frac,
+        repeated_line_fraction=repeated,
+        alpha_word_fraction=alpha_frac,
+        ellipsis_line_fraction=ellipsis,
+        bullet_line_fraction=bullets,
+        has_curly_brace="{" in text,
+    )

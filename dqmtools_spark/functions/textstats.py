@@ -1,12 +1,12 @@
-"""Heuristic text statistics as Spark SQL column expressions.
+"""Column-level text helpers and the Gopher/C4 statistics bundle.
 
-Gopher/C4-style per-document quality signals, kept entirely JVM-side
-(whole-stage codegen; no Python in the hot path).  Analog of the
-reference's per-channel stats consumption (SURVEY §2.5 G10,
-``wibeth_tests.py:241-242``) — here recomputed natively per document.
-
-Canonical token definition (shared with textproc.py reference impl):
-whitespace runs split the text; lines split on ``\\n``.
+The nine per-document quality signals are computed in Python by
+:func:`textproc.text_stats` (token, line and Unicode definitions are
+stated there), inside the fused pipeline UDF, so the rule layer reads
+them as plain columns.  :func:`all_stats` exposes the same function as
+the fields of one pandas UDF for callers that hold only a text column.
+Analog of the reference's per-channel stats consumption (SURVEY §2.5
+G10, ``wibeth_tests.py:241-242``) — here recomputed per document.
 """
 
 from __future__ import annotations
@@ -14,91 +14,19 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-from dqmtools_spark.functions.textproc import LANG_MARKERS
-
-# union of all language marker words — used for the stop-word fraction
-ALL_MARKERS = sorted(set().union(*LANG_MARKERS.values()))
-
-
-def words(text: Column) -> Column:
-    """Whitespace tokens (empty text -> empty array, not [''])."""
-    t = F.trim(text)
-    return F.when(F.length(t) == 0, F.array().cast("array<string>")).otherwise(
-        F.split(t, r"\s+")
-    )
+from dqmtools_spark.functions.textproc import ALL_MARKERS, TextStats  # noqa: F401
+from dqmtools_spark.functions.udfs import text_stats_udf
 
 
 def lines(text: Column) -> Column:
     return F.split(text, r"\n")
 
 
-def word_count(text: Column) -> Column:
-    """Count of whitespace-separated tokens.
-
-    ``regexp_count(\\S+)`` is a single codegen'd regex pass — no token
-    array materialization.  Identical to ``size(words(text))`` for any
-    input (a token IS a maximal \\S+ run)."""
-    return F.regexp_count(text, F.lit(r"\S+")).cast("long")
-
-
-def mean_word_len(text: Column) -> Column:
-    """Mean token length = (non-whitespace chars) / word_count.
-
-    Equivalent to averaging per-token lengths (tokens partition the
-    non-whitespace characters) but needs no array + aggregate HOF."""
-    wc = word_count(text)
-    non_ws = F.length(text) - F.regexp_count(text, F.lit(r"\s"))
-    return F.when(wc == 0, F.lit(None).cast("double")).otherwise(
-        non_ws.cast("double") / wc
-    )
-
-
-def symbol_ratio(text: Column) -> Column:
-    """Fraction of characters that are not letters/digits/whitespace."""
-    total = F.length(text)
-    syms = F.regexp_count(text, F.lit(r"[^\p{L}\p{N}\s]"))
-    return F.when(total == 0, F.lit(0.0)).otherwise(syms.cast("double") / total)
-
-
-# one compiled alternation over all marker words; token boundaries are
-# whitespace-or-edge lookarounds so "the" never matches inside "then"
-_MARKER_PATTERN = (
-    r"(?:(?<=\s)|^)(?:" + "|".join(ALL_MARKERS) + r")(?=\s|$)"
-)
-
-
-def stopword_fraction(text: Column) -> Column:
-    """Fraction of tokens that are (any-language) marker stop-words.
-
-    A 58-way ``array_contains`` per token is an interpreted HOF that
-    breaks whole-stage codegen; one regexp_count pass over the lowered
-    text counts the same token hits ~5x faster."""
-    wc = word_count(text)
-    hits = F.regexp_count(F.lower(text), F.lit(_MARKER_PATTERN))
-    return F.when(wc == 0, F.lit(0.0)).otherwise(hits.cast("double") / wc)
-
-
-def repeated_line_fraction(text: Column) -> Column:
-    """1 - distinct/total over non-empty lines (boilerplate detector)."""
-    ls = F.filter(lines(text), lambda x: F.length(F.trim(x)) > 0)
-    return F.when(F.size(ls) == 0, F.lit(0.0)).otherwise(
-        1.0 - F.size(F.array_distinct(ls)).cast("double") / F.size(ls)
-    )
-
-
-def alpha_word_fraction(text: Column) -> Column:
-    """Fraction of tokens containing at least one letter.
-
-    Counted as 1 - (letterless tokens)/wc: a token is letterless iff it
-    matches ``[^\\s\\p{L}]+`` between whitespace boundaries — one regex
-    pass instead of a per-token rlike HOF."""
-    wc = word_count(text)
-    non_alpha = F.regexp_count(
-        text, F.lit(r"(?:(?<=\s)|^)[^\s\p{L}]+(?=\s|$)")
-    )
-    return F.when(wc == 0, F.lit(0.0)).otherwise(
-        (wc - non_alpha).cast("double") / wc
-    )
+def all_stats(text: Column) -> dict[str, Column]:
+    """The full stat bundle the rule layer consumes, one column per
+    statistic, all fields of a single :func:`text_stats_udf` call."""
+    stats = text_stats_udf(text)
+    return {name: stats[name] for name in TextStats._fields}
 
 
 def token_count_bpe_ish(text: Column) -> Column:
@@ -106,64 +34,9 @@ def token_count_bpe_ish(text: Column) -> Column:
     return F.regexp_count(text, F.lit(r"\w+|[^\w\s]")).cast("long")
 
 
-def doc_fingerprint(text: Column) -> Column:
-    """Deterministic 64-bit document fingerprint (rolling-hash analog)."""
-    return F.xxhash64(text)
-
-
-def all_stats(text: Column) -> dict[str, Column]:
-    """The full stat bundle the rule layer consumes."""
-    return {
-        "word_count": word_count(text),
-        "mean_word_len": mean_word_len(text),
-        "symbol_ratio": symbol_ratio(text),
-        "stopword_fraction": stopword_fraction(text),
-        "repeated_line_fraction": repeated_line_fraction(text),
-        "alpha_word_fraction": alpha_word_fraction(text),
-        "ellipsis_line_fraction": ellipsis_line_fraction(text),
-        "bullet_line_fraction": bullet_line_fraction(text),
-        "has_curly_brace": has_curly_brace(text),
-    }
-
-
-def _nonempty_lines(text: Column) -> Column:
-    return F.filter(lines(text), lambda x: F.length(F.trim(x)) > 0)
-
-
-def ellipsis_line_fraction(text: Column) -> Column:
-    """Gopher signal: fraction of lines ending in an ellipsis
-    (truncated boilerplate/nav text)."""
-    ls = _nonempty_lines(text)
-    hits = F.size(
-        F.filter(ls, lambda x: x.endswith("...") | x.endswith("…"))
-    )
-    return F.when(F.size(ls) == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / F.size(ls)
-    )
-
-
-def bullet_line_fraction(text: Column) -> Column:
-    """Gopher signal: fraction of lines that are bullet items."""
-    ls = _nonempty_lines(text)
-    hits = F.size(
-        F.filter(
-            ls,
-            lambda x: x.startswith("- ") | x.startswith("* ") | x.startswith("• "),
-        )
-    )
-    return F.when(F.size(ls) == 0, F.lit(0.0)).otherwise(
-        hits.cast("double") / F.size(ls)
-    )
-
-
-def has_curly_brace(text: Column) -> Column:
-    """C4 signal: '{' almost always means leaked code/templating."""
-    return F.contains(text, F.lit("{"))
-
-
 def dedup_repeated_lines(text: Column) -> Column:
     """Gopher-style intra-document boilerplate REMOVAL (the transform
-    companion of :func:`repeated_line_fraction`'s signal): keep the
+    companion of the ``repeated_line_fraction`` signal): keep the
     FIRST occurrence of every exact line, preserving order, and
     reassemble with newlines.  Per-row, no shuffle.
 

@@ -1,10 +1,15 @@
 """Vectorized pandas/Arrow UDFs — the only Python in the hot path.
 
-Each UDF wraps a canonical pure function from ``textproc.py`` (the
-byte-identical contract) in an Arrow-batched pandas UDF.  Models
-(unigram LM) are built lazily once per executor process via a
-module-level singleton — the reference's channel-map-per-decoder
-pattern (``dataframe_creator.py:32-116``) re-expressed as broadcast-free
+The pipeline's Python work is ONE fused UDF per input form
+(``process_page_udf`` over html, ``process_text_udf`` over text): it
+calls the canonical pure functions of ``textproc.py`` (the
+byte-identical contract) for extraction, langid, perplexity, scrub and
+the nine Gopher/C4 text statistics, and returns them as one struct, so
+the text crosses the JVM<->Python boundary once.  ``extract_text_udf``
+and ``text_stats_udf`` expose single steps of it.  Models (unigram LM)
+are built lazily once per executor process via a module-level
+singleton — the reference's channel-map-per-decoder pattern
+(``dataframe_creator.py:32-116``) re-expressed as broadcast-free
 deterministic state.
 
 No per-row Spark UDFs (``F.udf``) anywhere (BASELINE input_hint).
@@ -18,25 +23,12 @@ from pyspark.sql import types as T
 
 from dqmtools_spark.functions import textproc
 
-# ---------------------------------------------------------------- extract
-
 
 @F.pandas_udf(T.StringType())
 def extract_text_udf(html: pd.Series) -> pd.Series:
     """HTML bytes -> extracted text (byte-identical per url)."""
     return html.map(textproc.extract_text)
 
-
-# ---------------------------------------------------------------- langid
-
-
-@F.pandas_udf(T.StringType())
-def langid_udf(text: pd.Series) -> pd.Series:
-    """Deterministic marker-based language ID (fastText stand-in)."""
-    return text.map(textproc.predict_lang)
-
-
-# ---------------------------------------------------------------- perplexity
 
 _MODEL_CACHE: dict[str, object] = {}
 
@@ -47,37 +39,13 @@ def _get_lm() -> tuple[dict[str, float], float]:
     return _MODEL_CACHE["lm"]  # type: ignore[return-value]
 
 
-@F.pandas_udf(T.DoubleType())
-def perplexity_udf(text: pd.Series) -> pd.Series:
-    """KenLM-style per-token perplexity from the deterministic unigram LM."""
-    model, oov = _get_lm()
-    return text.map(lambda t: textproc.perplexity(t, model, oov))
-
-
-# ---------------------------------------------------------------- scrub
-
-_SCRUB_SCHEMA = T.StructType(
-    [T.StructField("scrubbed_text", T.StringType())]
-    + [T.StructField(f"hits_{k}", T.LongType()) for k in textproc.SCRUB_KINDS]
-)
-
-
-@F.pandas_udf(_SCRUB_SCHEMA)
-def scrub_udf(text: pd.Series) -> pd.DataFrame:
-    """PII/toxicity scrub -> (scrubbed_text, per-kind hit counts)."""
-    scrubbed, counters = [], {k: [] for k in textproc.SCRUB_KINDS}
-    for t in text:
-        out, hits = textproc.scrub_text(t)
-        scrubbed.append(out)
-        for k in textproc.SCRUB_KINDS:
-            counters[k].append(hits[k])
-    data = {"scrubbed_text": scrubbed}
-    data.update({f"hits_{k}": v for k, v in counters.items()})
-    return pd.DataFrame(data)
-
-
 # ---------------------------------------------------------------- fused
 
+_STAT_TYPES = {"word_count": T.LongType(), "has_curly_brace": T.BooleanType()}
+_STAT_FIELDS = [
+    T.StructField(name, _STAT_TYPES.get(name, T.DoubleType()))
+    for name in textproc.TextStats._fields
+]
 _PROC_FIELDS = (
     [
         T.StructField("text_ex", T.StringType()),
@@ -86,11 +54,24 @@ _PROC_FIELDS = (
         T.StructField("scrubbed_text", T.StringType()),
     ]
     + [T.StructField(f"hits_{k}", T.LongType()) for k in textproc.SCRUB_KINDS]
+    + _STAT_FIELDS
 )
 _PROC_SCHEMA = T.StructType(_PROC_FIELDS)
 
 # flat field order of the fused-UDF output (checkpoint schema)
 PROC_FIELD_NAMES = [f.name for f in _PROC_FIELDS]
+
+
+def _stats_frame(texts) -> pd.DataFrame:
+    return pd.DataFrame.from_records(
+        [textproc.text_stats(t) for t in texts], columns=textproc.TextStats._fields
+    )
+
+
+@F.pandas_udf(T.StructType(_STAT_FIELDS))
+def text_stats_udf(text: pd.Series) -> pd.DataFrame:
+    """text -> the nine Gopher/C4 statistics (:func:`textproc.text_stats`)."""
+    return _stats_frame(text)
 
 
 def _process_texts(texts: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd.DataFrame:
@@ -114,7 +95,7 @@ def _process_texts(texts: pd.Series, lm=None, langid_fn=None, ppl_fn=None) -> pd
         "scrubbed_text": scrubbed,
     }
     data.update({f"hits_{k}": v for k, v in counters.items()})
-    return pd.DataFrame(data)
+    return pd.concat([pd.DataFrame(data), _stats_frame(texts)], axis=1)
 
 
 def make_process_udfs(lm=None, langid_fn=None, ppl_fn=None):
@@ -154,12 +135,11 @@ def make_process_udfs(lm=None, langid_fn=None, ppl_fn=None):
 
 
 # default instances — fused hot path: html -> (text, langid, perplexity,
-# scrub) in ONE Arrow round-trip.  Chaining individual UDFs instead
-# would ship the extracted text across the JVM<->Python boundary three
-# extra times; fusing them is the single biggest pipeline win (~25%).
-# They call the same textproc functions as the individual UDFs, so the
-# byte-identical contract is unchanged.  process_text_udf is the
-# pre-extracted-text form (reextract=False); text_ex passes through.
+# scrub, text stats) in ONE Arrow round-trip.  Chaining one UDF per
+# step instead would ship the extracted text across the JVM<->Python
+# boundary once per step; fusing them is the single biggest pipeline
+# win.  process_text_udf is the pre-extracted-text form
+# (reextract=False); text_ex passes through.
 process_page_udf, process_text_udf = make_process_udfs()
 
 

@@ -5,25 +5,29 @@ Two composable phases:
   PHASE 1 (Python, one fused Arrow stage):
     scan(url, warc_ts, html, lang)           -- column-pruned to html
       -> process_page_udf(html)              -- extract + langid +
-                                                perplexity + scrub in
+                                                perplexity + scrub +
+                                                the nine text stats in
                                                 ONE Arrow round-trip
   PHASE 2 (JVM codegen, zero Python):
-      -> stats columns (regex expressions)
       -> broadcast join 5-row lang-threshold dim   (no shuffle)
       -> rule columns -> reasons/keep              (same codegen stage)
       -> write, repartitioned by part_key          (the ONLY shuffle)
+
+The statistics are computed where the text already sits: as JVM
+expressions they re-split every document per statistic and cost as
+much as the whole Python stage.
 
 ``run_pipeline`` fuses both phases into one job (scan -> one narrow
 Python stage -> codegen -> write).  ``run_pipeline_staged`` materializes
 phase 1 to parquet between the phases — the reference's
 write-dataframes-then-analyze flow (``scripts/write_dqm_dataframes.py``
--> ``dqm_analyzer.py``, SURVEY S6/S7): the decoded/scrubbed text
-checkpoint is durable (resume re-reads it instead of re-extracting),
-and each phase runs as a pure stage.  A pure Python stage and a pure
-codegen stage each scale near-linearly with cores; the fused stage
-interleaves both per task and is more sensitive to batch pipelining
-(see bench.py), so the staged form is also what the scaling benchmark
-exercises.
+-> ``dqm_analyzer.py``, SURVEY S6/S7): the decoded/scrubbed text and
+its statistics are durable (resume re-reads them instead of
+re-extracting), and each phase runs as a pure stage.  A pure Python
+stage and a pure codegen stage each scale near-linearly with cores; the
+fused stage interleaves both per task and is more sensitive to batch
+pipelining (see bench.py), so the staged form is also what the scaling
+benchmark exercises.
 
 Rule metrics are a separate aggregation over the (cheap,
 already-computed) boolean columns.
@@ -34,7 +38,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from dqmtools_spark.functions import textstats
+from dqmtools_spark.functions.textproc import TextStats
 from dqmtools_spark.functions.udfs import (
     PROC_FIELD_NAMES,
     make_process_udfs,
@@ -52,9 +56,9 @@ def python_phase(
     df: DataFrame, reextract: bool = True, models: dict | None = None
 ) -> DataFrame:
     """PHASE 1: pages -> flat (url, warc_ts, lang, text_ex, lang_pred,
-    perplexity, scrubbed_text, hits_*) — all Python work of the
-    pipeline, one fused Arrow stage, flattened so the result can be
-    checkpointed to parquet as-is.
+    perplexity, scrubbed_text, hits_*, the nine text stats) — all
+    Python work of the pipeline, one fused Arrow stage, flattened so
+    the result can be checkpointed to parquet as-is.
 
     ``reextract=True`` recomputes text from html (the byte-identical
     invariant path); False trusts the incoming ``text`` column.
@@ -77,15 +81,17 @@ def jvm_phase(
     spark: SparkSession,
     n_buckets: int = DEFAULT_PART_BUCKETS,
 ) -> DataFrame:
-    """PHASE 2a: attach stats columns + partition key + per-lang
-    thresholds — pure whole-stage-codegen expressions over phase-1
-    output (fresh from the UDF or re-read from a checkpoint)."""
-    df = processed
-    stats = textstats.all_stats(F.col("text_ex"))
-    df = df.select("*", *[c.alias(name) for name, c in stats.items()])
+    """PHASE 2a: attach partition key + per-lang thresholds — pure
+    whole-stage-codegen expressions over phase-1 output (fresh from the
+    UDF or re-read from a checkpoint), which already carries the stats.
+    Raises when a stat column is missing: folding without one would
+    degrade its rule to a WARNING and keep docs it should drop."""
+    missing = [c for c in TextStats._fields if c not in processed.columns]
+    if missing:
+        raise ValueError(f"phase-1 output lacks stat columns {missing}")
     # deterministic partition key: hash-bucket of url (skew-free even
     # when one domain holds 30% of rows — url, not domain, is hashed)
-    df = df.withColumn(
+    df = processed.withColumn(
         "part_key", F.pmod(F.xxhash64(F.col("url")), F.lit(n_buckets)).cast("int")
     )
     return join_lang_thresholds(df, spark)
@@ -158,9 +164,13 @@ def _hadoop_path_exists(spark: SparkSession, path: str) -> bool:
 
 
 def staged_checkpoint_complete(spark: SparkSession, checkpoint_path: str) -> bool:
-    """True when the phase-1 text checkpoint finished writing (Spark's
-    ``_SUCCESS`` commit marker exists)."""
-    return _hadoop_path_exists(spark, checkpoint_path.rstrip("/") + "/_SUCCESS")
+    """True when the phase-1 checkpoint finished writing (Spark's
+    ``_SUCCESS`` commit marker exists) and carries every phase-1 column.
+    A checkpoint written before the text stats moved into phase 1 has
+    the marker but not the stat columns, so it counts as incomplete."""
+    if not _hadoop_path_exists(spark, checkpoint_path.rstrip("/") + "/_SUCCESS"):
+        return False
+    return set(PROC_FIELD_NAMES) <= set(spark.read.parquet(checkpoint_path).columns)
 
 
 def run_pipeline_staged(
@@ -180,10 +190,11 @@ def run_pipeline_staged(
     actions never re-run the Python stage.
 
     Resumability: when the checkpoint is already complete (``_SUCCESS``
-    marker), phase 1 is SKIPPED entirely — a re-submitted job goes
-    straight to the cheap JVM phase, which is the point of the durable
-    checkpoint.  A half-written checkpoint (no marker after a
-    mid-write kill) is rewritten.  Pass ``force=True`` when the INPUT
+    marker and every phase-1 column), phase 1 is SKIPPED entirely — a
+    re-submitted job goes straight to the cheap JVM phase, which is the
+    point of the durable checkpoint.  A half-written checkpoint (no
+    marker after a mid-write kill) or one from an older schema is
+    rewritten.  Pass ``force=True`` when the INPUT
     changed and the checkpoint must be rebuilt despite being complete.
     """
     registry = registry or default_registry()

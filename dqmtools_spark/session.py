@@ -8,6 +8,8 @@ One place to pin the configs that matter at 100 TB:
   reference's per-row ``df.apply`` lambdas are banned here).
 - ``spark.sql.shuffle.partitions`` sized for the local harness; on a
   real cluster AQE coalesces from a deliberately-high initial number.
+- A fixed-size young gen for the driver JVM, so its resident memory
+  does not swing with G1's eden sizing from one run to the next.
 """
 
 from __future__ import annotations
@@ -52,6 +54,10 @@ def get_spark(
         # (sources/tables.py relies on this for --force re-runs)
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # fixed young gen at 1/8 of the heap: G1 would otherwise grow
+        # eden towards 60% of it, and the driver's resident memory would
+        # depend on how far into an eden cycle a job happened to end
+        .config("spark.driver.defaultJavaOptions", "-XX:NewRatio=7")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

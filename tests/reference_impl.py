@@ -13,6 +13,8 @@ fold) is re-implemented here in plain Python/pandas.
 
 from __future__ import annotations
 
+import re
+
 import pandas as pd
 
 from dqmtools_spark.functions import textproc
@@ -21,22 +23,35 @@ from dqmtools_spark.rules.builtin import LANG_THRESHOLDS, THRESHOLDS
 
 _LANG_THR = {row["lang_pred"]: row for row in LANG_THRESHOLDS}
 _MARKERS = set(ALL_MARKERS)
+# the stated token contract: whitespace is Java's \s, the six ASCII
+# characters below, not str.split()'s Unicode whitespace (NBSP,
+# U+001C..U+001F and U+2028 stay inside a token)
+_WS = " \t\n\x0b\x0c\r"
+_WS_RUN = re.compile("[" + re.escape(_WS) + "]+")
+# a stop-word directly before one final line terminator still counts
+# (Java's `$` matches before it)
+_LINE_TERMINATORS = "\x85\u2028\u2029"
+
+
+def _tokens(text: str) -> list[str]:
+    return [t for t in _WS_RUN.split(text) if t]
 
 
 def _stats(text: str) -> dict:
-    toks = text.split()
+    toks = _tokens(text)
     n = len(toks)
-    lines = [ln for ln in text.split("\n") if ln.strip()]
+    lines = [ln for ln in text.split("\n") if ln.strip(" ")]
     total_chars = len(text)
-    symbols = sum(1 for ch in text if not (ch.isalnum() or ch.isspace()))
-    low_toks = text.lower().split()
+    symbols = sum(1 for ch in text if not (ch.isalnum() or ch in _WS))
+    low_toks = _tokens(text.lower())
+    nstop = sum(1 for t in low_toks if t in _MARKERS)
+    if low_toks and text[-1] in _LINE_TERMINATORS and low_toks[-1][:-1] in _MARKERS:
+        nstop += 1
     return {
         "word_count": n,
         "mean_word_len": (sum(len(t) for t in toks) / n) if n else None,
         "symbol_ratio": (symbols / total_chars) if total_chars else 0.0,
-        "stopword_fraction": (
-            sum(1 for t in low_toks if t in _MARKERS) / n if n else 0.0
-        ),
+        "stopword_fraction": nstop / n if n else 0.0,
         "repeated_line_fraction": (
             1.0 - len(set(lines)) / len(lines) if lines else 0.0
         ),

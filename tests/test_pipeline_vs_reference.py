@@ -1,7 +1,8 @@
 """The BASELINE gates: keep/drop F1 >= 0.99 and byte-identical text.
 
 Spark pipeline vs the independent pure-pandas reference labeler over
-the deterministic synthetic pages table (seed 42).
+the deterministic synthetic pages table (seed 42) plus one page with an
+interior no-break space, which the token contract keeps inside a token.
 """
 
 from __future__ import annotations
@@ -9,7 +10,9 @@ from __future__ import annotations
 import pandas as pd
 import pytest
 
+from dqmtools_spark.functions.textproc import extract_text
 from dqmtools_spark.pipeline import run_pipeline
+from dqmtools_spark.schemas import PAGES_SCHEMA
 from dqmtools_spark.synth import gen_pages_pdf, synth_pages
 from tests.reference_impl import label_pages
 
@@ -17,17 +20,24 @@ N_DOCS = 400
 SEED = 42
 
 
+# 14 tokens under the engine's ASCII-whitespace contract, 15 under
+# str.split(), which also splits on the no-break space
+NBSP_URL = "u://nbsp"
+NBSP_HTML = (
+    "<html><body><p>the data and the table of the query is in the stream "
+    "with key\N{NO-BREAK SPACE}value</p></body></html>"
+).encode("utf-8")
+
+
 @pytest.fixture(scope="module")
 def joined(spark):
-    pages = synth_pages(spark, N_DOCS, seed=SEED)
-    result, _ = run_pipeline(spark, pages)
+    pdf = gen_pages_pdf(SEED, list(range(N_DOCS)))
+    nbsp = dict(pdf.iloc[0], url=NBSP_URL, html=NBSP_HTML, text=extract_text(NBSP_HTML))
+    pdf = pd.concat([pdf, pd.DataFrame([nbsp])], ignore_index=True)
+    result, _ = run_pipeline(spark, spark.createDataFrame(pdf, PAGES_SCHEMA))
     got = result.toPandas().set_index("url").sort_index()
-    ref = (
-        label_pages(gen_pages_pdf(SEED, list(range(N_DOCS))))
-        .set_index("url")
-        .sort_index()
-    )
-    assert len(got) == len(ref) == N_DOCS
+    ref = label_pages(pdf).set_index("url").sort_index()
+    assert len(got) == len(ref) == N_DOCS + 1
     return got, ref
 
 
@@ -52,6 +62,12 @@ def test_reasons_identical(joined):
     got, ref = joined
     for url in got.index:
         assert list(got.loc[url, "reasons"]) == list(ref.loc[url, "reasons"]), url
+
+
+def test_nbsp_is_not_whitespace(joined):
+    got, ref = joined
+    assert list(got.loc[NBSP_URL, "reasons"]) == ["min_word_count"]
+    assert list(ref.loc[NBSP_URL, "reasons"]) == ["min_word_count"]
 
 
 def test_langid_identical(joined):

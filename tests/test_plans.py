@@ -35,6 +35,11 @@ def test_pipeline_plan_one_python_stage_no_shuffle(spark):
     # node (formatted mode prints each node twice: tree + detail, so
     # match the tree form "ArrowEvalPython (n)")
     assert len(re.findall(r"ArrowEvalPython \(\d+\)", plan)) == 1, "UDFs not fused"
+    # the text stats ride the fused UDF: no per-row JVM regex matches
+    # (Spark rewrites regexp_count to size(regexp_extract_all(...)))
+    # and no line/token splitting in the plan
+    assert "regexp_extract_all" not in plan, "text stats back in JVM regexes"
+    assert "split(" not in plan, "text stats back in JVM splits"
 
 
 def test_broadcast_dim_join_stays_broadcast(spark, sf_dir):

@@ -65,6 +65,30 @@ def test_half_written_checkpoint_is_rebuilt(spark, tmp_path):
     assert staged_checkpoint_complete(spark, ckpt)
 
 
+def test_checkpoint_without_stat_columns_is_rebuilt(spark, tmp_path):
+    """A checkpoint written before the text stats moved into phase 1
+    has ``_SUCCESS`` but no stat columns.  It must be rebuilt, never
+    folded with nine rules degraded to "missing input"."""
+    from dqmtools_spark.functions.textproc import TextStats
+    from dqmtools_spark.pipeline import jvm_phase, python_phase
+
+    pages = synth_pages(spark, 120, seed=8)
+    fresh, _ = run_pipeline(spark, pages, n_buckets=4)
+    full, ckpt = str(tmp_path / "full"), str(tmp_path / "text_checkpoint")
+    python_phase(pages).write.parquet(full)
+    spark.read.parquet(full).drop(*TextStats._fields).write.parquet(ckpt)
+    assert not staged_checkpoint_complete(spark, ckpt)
+    with pytest.raises(ValueError, match="stat columns"):
+        jvm_phase(spark.read.parquet(ckpt), spark)
+
+    res, outcomes = run_pipeline_staged(spark, pages, ckpt, n_buckets=4)
+    assert all(o.column is not None for o in outcomes)
+    assert {r["url"]: r.asDict() for r in res.collect()} == {
+        r["url"]: r.asDict() for r in fresh.collect()
+    }
+    assert staged_checkpoint_complete(spark, ckpt)
+
+
 def test_rule_metrics_from_results_matches_live(spark):
     """The written doc_results carry everything the metrics cube needs
     (reasons array); the cheap-scan variant must agree exactly with the
